@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,10 +29,13 @@ import org.apache.spark.sql.functions._
   * information travels each round, giving O(log diameter) convergence
   * (the hash-to-min-neighbor + pointer-jump scheme of Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC 2014): the same
-  * probe graph converges in 6 rounds with jumping, and 20 rounds now
-  * covers diameters up to ~2^20 at any corpus scale. Non-convergence
-  * within `maxIter` throws rather than returning a partial closure —
-  * wrong groups are worse than a visible failure.
+  * probe graph converges in 6 rounds with jumping, and 20 rounds cover
+  * diameters up to ~2^20 when ids grow along long paths. The bound does
+  * not hold for every labeling: on a path with randomly ordered ids the
+  * jump step helps far less (a 2,000-node one needs hundreds of rounds
+  * in simulation). Non-convergence within `maxIter` throws rather than
+  * returning a partial closure — wrong groups are worse than a visible
+  * failure.
   *
   * r15 execution rewrite (guide §1.2/§2.4): the loop body is pure
   * (Long, Long) message passing — Catalyst buys it nothing, and the
@@ -50,8 +56,31 @@ import org.apache.spark.sql.functions._
   * web scale. Numbers of rounds, labels and the returned rows are
   * identical to the DataFrame formulation (same hashmin+jump fixpoint =
   * per-component minimum).
+  *
+  * Contract first, then propagate (the local-contraction step of the same
+  * Kiveris et al. line of work). After the edge list is materialized,
+  * the undirected pairs are split into ceil(directed edges / 64k)
+  * partitions, hash-partitioned by one endpoint, and each partition runs
+  * a sequential union-find that emits (node, minimum node of its
+  * partition-local set). The partition count has no upper cap, so a
+  * task's union-find holds one partition's nodes — ~64k on average at
+  * any corpus size; a hub's edges stay in its own partition. The star
+  * edges have exactly the connectivity of the input: every input edge
+  * lies inside one local set.
+  *   - One partition (≤ 64k directed edges): the union-find saw every
+  *     edge, so its labels ARE the components, whatever the diameter or
+  *     labeling. No round runs; the closure costs the edge count job and
+  *     nothing else.
+  *   - Several partitions: the hashmin + pointer-jump loop above runs
+  *     unchanged on the star edges and only has to merge the components
+  *     that span partitions. Its round width stays capped by the
+  *     session's shuffle-partition conf.
   */
 object ConnectedComponents {
+
+  /** Directed edges per task: the union-find's partition size and the
+    * loop's round width. */
+  private val EdgesPerTask = 65536L
 
   /** Returns one row per node appearing in `edges`: (node, component)
     * where component is the minimum node id reachable from it. */
@@ -59,24 +88,56 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // (from, to) per direction: label(from) is delivered to `to`.
-    // Partitioned by the message key once; localCheckpoint cuts the
-    // upstream pair-pipeline lineage out of every round.
-    val symRaw = edges
+    // localCheckpoint cuts the upstream pair-pipeline lineage: the count
+    // materializes the edges once, and nothing below recomputes them
+    val pairs = edges
       .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
       .as[(Long, Long)].rdd
+    pairs.localCheckpoint()
+    val nEdges = 2 * pairs.count() // directed
+    val ufParts = math.max(1L, (nEdges + EdgesPerTask - 1) / EdgesPerTask).toInt
+    val labels =
+      if (ufParts == 1) pairs.coalesce(1).mapPartitions(localComponents)
+      else {
+        // the loop's round width: the same ~64k messages per task, capped
+        // by the session's shuffle-partition conf — the RDD loop has no
+        // AQE to coalesce the otherwise-fixed tiny per-round shuffles
+        val loopParts = math.min(spark.sessionState.conf.numShufflePartitions, ufParts)
+        propagate(
+          pairs.partitionBy(new HashPartitioner(ufParts)).mapPartitions(localComponents),
+          new HashPartitioner(loopParts), maxIter)
+      }
+    labels.toDF("n", "label")
+  }
+
+  /** Sequential union-find over one partition's edges (union by minimum
+    * root, path compression): (node, minimum node of its local set) for
+    * every node the partition holds. */
+  private def localComponents(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var root = parent.getOrElseUpdate(x, x)
+      while (parent(root) != root) root = parent(root)
+      var c = x
+      while (c != root) { val next = parent(c); parent(c) = root; c = next }
+      root
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(n => (n, find(n)))
+  }
+
+  /** Hashmin + pointer jumping over the contracted (node, local root)
+    * star edges, merging the components that span partitions. */
+  private def propagate(stars: RDD[(Long, Long)], part: HashPartitioner,
+      maxIter: Int): RDD[(Long, Long)] = {
+    // (from, to) per direction: label(from) is delivered to `to`.
+    // Partitioned by the message key once and never re-shuffled.
+    val sym = stars
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-    symRaw.localCheckpoint()
-    // scale-adaptive round width (guide §2: derive from input size, never
-    // a local constant): ~64k messages per task, capped by the session's
-    // shuffle-partition conf — the RDD loop has no AQE to coalesce the
-    // otherwise-fixed tiny per-round shuffles
-    val nEdges = symRaw.count()
-    val nParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      (nEdges + 65535) / 65536)).toInt
-    val part = new HashPartitioner(nParts)
-    val sym = symRaw.partitionBy(part)
+      .partitionBy(part)
     sym.localCheckpoint()
 
     // labels: (node, label), init own id, co-partitioned with sym
@@ -93,7 +154,7 @@ object ConnectedComponents {
     // decreases the sum (BigInt — cannot overflow at any corpus scale);
     // the aggregate action is also what materializes each round's
     // localCheckpoint — ONE job per round
-    def labelSum(rdd: org.apache.spark.rdd.RDD[(Long, Long)]): BigInt =
+    def labelSum(rdd: RDD[(Long, Long)]): BigInt =
       rdd.aggregate(BigInt(0))((acc, kv) => acc + BigInt(kv._2), _ + _)
     // None until the first round's sum lands — the first round always
     // runs (it must) without paying an initial sum job of its own
@@ -117,10 +178,7 @@ object ConnectedComponents {
         .map { case (l, (n, ll)) => (n, math.min(l, ll.getOrElse(l))) }
         .partitionBy(part)
       next.localCheckpoint()
-      val t0 = System.nanoTime()
       val s = labelSum(next)
-      if (sys.env.contains("GRAFT_CC_TRACE")) System.err.println(
-        f"[cc] round ${it + 1}: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       converged = prevSum.contains(s)
       prevSum = Some(s)
       val prior = labels
@@ -132,6 +190,6 @@ object ConnectedComponents {
       throw new IllegalStateException(
         s"ConnectedComponents did not converge in $maxIter rounds " +
           "(label sum still decreasing) — raise maxIter")
-    labels.toDF("n", "label")
+    labels
   }
 }

@@ -199,14 +199,17 @@ object StreamingTableJoin {
         OutputMode.Append, GroupStateTimeout.NoTimeout) { (key, rows, state) =>
         var cur = state.getOption.map(_._1).getOrElse(Option.empty[VT])
         var curTs = state.getOption.map(_._2).getOrElse(new Timestamp(0L))
+        var tableChanged = false
         val out = Seq.newBuilder[(K, VR, Timestamp)]
         // event-time order; table updates before stream lookups at equal ts
         rows.toSeq.sortBy(r => (r._5.getTime, r._5.getNanos, r._2)).foreach { r =>
-          if (!r._2) { cur = r._4; curTs = r._5 }
+          if (!r._2) { cur = r._4; curTs = r._5; tableChanged = true }
           else if (r._3.isDefined && (!innerFlag || cur.isDefined))
             out += ((r._1, joinFn(r._3.get, cur), r._5))
         }
-        state.update((cur, curTs))
+        // stream-only keys only read the table: writing the unchanged
+        // value back would cost a state-store put per lookup
+        if (tableChanged) state.update((cur, curTs))
         out.result().iterator
       }
   }

@@ -487,9 +487,11 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan.take(1500))
     // the pin forbids RANK-window pair generation over the corpus; the
     // r16 bucket-size guard is a count window keyed by the band (the
-    // spill-safe pre-filter before collect_list) and is allowed
+    // spill-safe pre-filter before collect_list) and is the ONLY window
     assert(!plan.contains("row_number"), plan.take(1500))
     assert(!plan.contains("rank("), plan.take(1500))
+    assert("windowspecdefinition".r.findAllIn(plan).size === 1, plan.take(3000))
+    assert("count\\(1\\) windowspecdefinition".r.findAllIn(plan).size === 1, plan.take(3000))
   }
 
   test("HLL registers: one partial-agg'd shuffle, no join before estimate") {

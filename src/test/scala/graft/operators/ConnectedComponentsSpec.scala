@@ -72,4 +72,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got.length === 2000)
     assert(got.forall(_._2 == 0L), "every node must reach the min endpoint")
   }
+
+  test("above one union-find partition: the loop merges cross-partition components") {
+    // 40k-node chain (79,998 directed edges > 65,536): hash partitioning
+    // spreads consecutive ids over the partitions, so the local
+    // union-finds see it in pieces and the hashmin + pointer-jump loop has
+    // to stitch them back together. Plus a sparse random graph of many
+    // small components on 12k other nodes.
+    val rnd = new Random(7)
+    val chain = (0L until 39999L).map(i => (i, i + 1))
+    val sparse = (1 to 3000).map(_ => (40000L + rnd.nextInt(12000), 40000L + rnd.nextInt(12000)))
+    val edges = chain ++ sparse
+    assert(2 * edges.length > 65536)
+    check(edges, "chain + sparse random graph")
+  }
 }

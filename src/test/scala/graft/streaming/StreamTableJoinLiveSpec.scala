@@ -17,7 +17,7 @@ class StreamTableJoinLiveSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def harness(inner: Boolean) = {
+  private def harness(inner: Boolean, suffix: String = "") = {
     implicit val sqlCtx = spark.sqlContext
     val sMem = MemoryStream[(String, String, java.sql.Timestamp)]
     val tMem = MemoryStream[(String, String, java.sql.Timestamp)]
@@ -27,7 +27,7 @@ class StreamTableJoinLiveSpec extends AnyFunSuite {
     val joined =
       if (inner) stream.joinTable(table)(_ + "+" + _)
       else stream.leftJoinTable(table)((v, t) => v + "+" + t.getOrElse("null"))
-    val name = s"stlive_${if (inner) "inner" else "left"}"
+    val name = s"stlive_${if (inner) "inner" else "left"}$suffix"
     val q = joined.toDF.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append).start()
     (sMem, tMem, q, () => spark.table(name).collect()
@@ -55,6 +55,27 @@ class StreamTableJoinLiveSpec extends AnyFunSuite {
       sMem.addData(("k1", "S3", ts(5000L)))
       q.processAllAvailable()
       assert(emitted() === Seq(("k1", "S2+T1"))) // S3 finds no state
+    } finally q.stop()
+  }
+
+  test("a stream-only batch reads the table state without writing it") {
+    val (sMem, tMem, q, emitted) = harness(inner = true, suffix = "_reads")
+    // the progress of the batch that just ran (the only one with input)
+    def lastState = q.recentProgress.filter(_.numInputRows > 0).last.stateOperators.head
+    try {
+      tMem.addData(("k1", "T1", ts(1000L)), ("k2", "T2", ts(1000L)))
+      q.processAllAvailable()
+      assert(lastState.numRowsUpdated === 2)
+
+      sMem.addData(("k1", "S1", ts(2000L)), ("k2", "S2", ts(2000L)), ("k3", "S3", ts(2000L)))
+      q.processAllAvailable()
+      assert(lastState.numRowsUpdated === 0)
+      assert(lastState.numRowsTotal === 2) // the miss on k3 leaves no state
+      assert(emitted().sorted === Seq(("k1", "S1+T1"), ("k2", "S2+T2")))
+
+      sMem.addData(("k1", "S3", ts(3000L)))
+      q.processAllAvailable()
+      assert(emitted().sorted === Seq(("k1", "S1+T1"), ("k1", "S3+T1"), ("k2", "S2+T2")))
     } finally q.stop()
   }
 
